@@ -16,15 +16,15 @@ Scale shape: the landmark set L is an arithmetic 10% supplier sample
 (node % 20 == 0 — the q_trustrank seed rule, so both engines derive it
 from the data), and the estimator's whole point is |L| stays BOUNDED as
 the graph grows (Eppstein–Wang: O(log n / ε²) landmarks for ε-accurate
-centrality).  The BFS is the bfs_hops delta/frontier loop with state
-keyed on (node, landmark) pairs — per-round shuffle is
+centrality).  The BFS is graph.frontier_relax's delta/frontier loop
+with state keyed on (node, landmark) pairs — per-round shuffle is
 O(|frontier| · avg-degree), frontier/visited localCheckpoint per round,
 empty-frontier early stop; the |V|·|L| distance table is the documented
 memory envelope (swap the broadcast frontier joins for the shuffled
 copartition form past broadcast size, the graph.pagerank switch).
 
 Determinism/oracle contract: distances are all-integer monotone
-relaxations with a fixed unroll (the bfs_hops recipe) so the
+relaxations with a fixed unroll (the frontier_relax recipe) so the
 identically-unrolled DuckDB CTEs agree exactly; the single fp step (the
 harmonic sum of ≤|L| reciprocals) is rounded 12 dp in-plan in both
 engines.  The sweep's R+1-stability post_check re-runs the oracle with
@@ -38,7 +38,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .graph import _unroll_stability_check, trade_edges
+from .graph import (
+    _TRADE_EDGES_SQL,
+    _decode_node,
+    _decode_sql,
+    _unroll_stability_check,
+    trade_edges,
+)
 
 _CL_ROUNDS = 6  # fixed unroll; the trade graph settles in <=3 (dense bipartite)
 _CL_SEED_MOD = 20  # landmarks = trusted suppliers (node % 20 == 0), ~10% of suppliers
@@ -52,7 +58,7 @@ def landmark_distances(
 ) -> DataFrame:
     """(node, lm, dist): exact hop distance from every landmark to every
     node reachable within ``rounds``, via the multi-source delta/frontier
-    BFS of graph.bfs_hops generalized to per-landmark state — the
+    BFS of graph.frontier_relax generalized to per-landmark state — the
     frontier carries (node, lm, dist) triples and first-reach per PAIR
     is minimal (unit weights), so relaxation is integer and monotone.
 
@@ -119,7 +125,7 @@ def landmark_distances(
     else:
         # r13 MEASURED NEGATIVE (do not retry): dst-clustering the
         # resident edges at n_part=8 so the per-round bit_or aggregate
-        # rides the exchange (the bfs_hops move) was A/B'd at 7.0-7.9 s
+        # rides the exchange (the frontier_relax move) was A/B'd at 7.0-7.9s
         # vs 6.4-7.4 s for this shape — the expansion here is
         # compute-heavy (|E_f| word rows through bit_or per round) and
         # losing the checkpoint's ~64-way map parallelism costs more
@@ -225,8 +231,7 @@ def _sql_closeness(rounds: int = _CL_ROUNDS) -> str:
     CTEs (state keyed on (node, lm) pairs; min-over-union relaxation)."""
     ctes = [
         f"""e AS MATERIALIZED (
-  SELECT DISTINCT l.l_suppkey * 2 AS src, o.o_custkey * 2 + 1 AS dst
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  {_TRADE_EDGES_SQL}
 ),
 ed AS MATERIALIZED (SELECT src, dst FROM e UNION SELECT dst AS src, src AS dst FROM e),
 d0 AS (
@@ -254,8 +259,7 @@ h AS (
   SELECT node, round(sum(1.0 / dist), 12) AS h
   FROM d{rounds} WHERE dist > 0 GROUP BY node
 )
-SELECT CASE WHEN nodes.node % 2 = 0 THEN 'supplier' ELSE 'customer' END AS kind,
-       CAST(nodes.node // 2 AS BIGINT) AS key,
+SELECT {_decode_sql("nodes.node")},
        round(coalesce(h.h, 0.0), 6) AS harmonic
 FROM nodes LEFT JOIN h ON nodes.node = h.node
 """
@@ -291,10 +295,7 @@ def q_closeness_landmarks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         nodes.join(F.broadcast(h), "node", "left")
         .select(
-            F.when(F.col("node") % 2 == 0, F.lit("supplier"))
-            .otherwise(F.lit("customer"))
-            .alias("kind"),
-            (F.col("node") / 2).cast("long").alias("key"),
+            *_decode_node(),
             F.round(F.coalesce(F.col("h"), F.lit(0.0)), 6).alias("harmonic"),
         )
     )

@@ -9,6 +9,9 @@ different summation orders cannot drift across 10 iterations.
 
 from __future__ import annotations
 
+from functools import partial
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -18,6 +21,22 @@ from ..sources import load
 
 _PR_DAMPING = 0.85
 _PR_ITERS = 10
+# Seed rule: trusted suppliers = suppkey ≡ 0 (mod 10), i.e. node ids 2k
+# with node % 20 == 0.  Pure arithmetic, so both engines derive the same
+# set; TrustRank's teleport set and the frontier queries' sources.
+_SEED_MOD = 20
+
+#: trade_edges as DuckDB text: the one oracle-side definition of the graph
+_TRADE_EDGES_SQL = """SELECT DISTINCT l.l_suppkey * 2 AS src, o.o_custkey * 2 + 1 AS dst
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey"""
+
+
+def _decode_sql(node: str = "node") -> str:
+    """SQL twin of _decode_node: (kind, key) select items for ``node``."""
+    return (
+        f"CASE WHEN {node} % 2 = 0 THEN 'supplier' ELSE 'customer' END AS kind,\n"
+        f"       CAST({node} // 2 AS BIGINT) AS key"
+    )
 
 
 def pagerank(
@@ -30,80 +49,48 @@ def pagerank(
     checkpoint_every: int | None = None,
     join_strategy: str = "broadcast",
     truncate_every: int = 2,
+    seed_mod: int | None = None,
 ) -> DataFrame:
-    """Power-method PageRank over an edge list ``(src, dst)``.
+    """Power-method PageRank over an edge list ``(src, dst)``; returns
+    (node, rank).
 
-    ``directed=False`` (default): each edge walks both ways —
-    random-walk-on-a-graph semantics, which sidesteps dangling-mass
-    bookkeeping (every node with an edge has out-degree ≥ 1).
-    ``directed=True``: edges walk src→dst only; nodes with no out-edges
-    (dangling) leak their rank, which is re-distributed uniformly each
-    iteration (the standard dangling-mass correction: rank' = (1-d)/N +
-    d·(contribs + m_dangling/N)), so Σrank stays 1.  The dangling mass
-    is one O(|V|) scalar agg per iteration, rounded to 12 dp so both
-    engines agree despite different summation orders.
+    Teleport contract: each iteration computes
+    rank' = round((1−d)·t + d·(Pᵀrank + dangling), 12), where t is
 
-    Scale shape (the Pregel pattern in DataFrames): each iteration is
-    one join of the edge list with the current rank STATE — a |V|-row
-    (node, outdeg, rank) vector; folding outdeg into the state replaces
-    the old per-iteration walk⋈deg join + broadcast with a column — plus
-    one hash agg keyed on dst, both map-side combinable.  Lineage is
-    truncated every ``truncate_every`` iterations (default 2 — the
-    measured knee in tools/ab_pagerank_cadence.py: results are cadence-
-    invariant because the 12-dp rounding is in-plan, and each skipped
-    eager materialization saves a scheduled job + broadcast round, ~15%
-    of the 10-iteration wall; deeper cadences trade recompute-on-failure
-    and plan size for little more), otherwise iteration k re-plans all
-    k-1 predecessors.  Ranks are
-    rounded to 12 dp EACH iteration — the determinism contract that
-    makes the unrolled-CTE oracle bit-comparable (summation order
-    differs between engines; rounding every round stops drift from
-    compounding).
+    - uniform (``seed_mod=None``, default): the scalar 1/N, written
+      ``(1−d)/N`` as one literal; rank starts at 1/N;
+    - seeded (``seed_mod=k``, personalized PageRank / TrustRank): the
+      column sw = 1/|S| on the seed set S = {node : node % k == 0}, 0
+      elsewhere, written ``(1−d)·sw``; rank starts at sw.  An empty S
+      raises ``ValueError``.  ``seed_mod=1`` puts every node in S and
+      reproduces the undirected uniform ranks bit-for-bit.
 
-    Robustness knobs (VERDICT r6 items 6; both OFF for the
-    oracle-checked fixed-iteration default):
+    ``directed=False`` walks each edge both ways (no dangling mass).
+    ``directed=True`` walks src→dst only; the rank m held by nodes with
+    no out-edges is rounded to 12 dp and handed back along t:
+    (d·m)/N uniform, (d·m)·sw seeded — Σrank stays 1.
 
-    - ``tol``: early-stop when max |Δrank| < tol (one extra small join
-      per iteration, only when set).  Because every iterate is 12-dp
-      rounded, a converged vector is a FIXPOINT — further iterations
-      reproduce it bit-identically, so early-stop agrees exactly with
-      fixed-iteration once converged (asserted in tests/test_graph.py).
-    - ``checkpoint_every``: every k-th truncation uses RELIABLE
-      ``.checkpoint()`` (requires ``spark.sparkContext.setCheckpointDir``)
-      instead of ``localCheckpoint`` — localCheckpoint pins blocks to
-      executors, so on a real cluster an executor loss mid-iteration
-      kills the job (r6 verdict note); a reliable checkpoint cadence
-      bounds recomputation to k iterations.  The knob covers EVERY
-      non-recomputable frame the loop re-reads: the rank iterates AND
-      the static ``nodes``/``deg`` tables (the persisted edge list
-      keeps its lineage, so it recomputes on block loss without help).
-      Local runs keep the (faster) localCheckpoint default.
+    Every iterate is rounded to 12 dp in-plan, which is the determinism
+    contract with the unrolled DuckDB oracles: summation order differs
+    between engines, partition counts and join strategies, and the
+    per-iteration rounding stops that difference from compounding.
 
-    ``join_strategy`` picks how the |V|-row frames (ranks, deg,
-    contribs) meet the persisted src-clustered edge list each iteration
-    (VERDICT r7 item 3 — the billion-node fallback as code, not a
-    comment):
+    Knobs (none changes the ranks):
 
-    - ``'broadcast'`` (default): rank-sized sides are broadcast — zero
-      edge movement, zero rank shuffle; right whenever |V| rows fit an
-      executor (~every graph whose rank vector is ≪ executor memory).
-    - ``'copartition'``: plain shuffled joins.  The edge list was
-      hash-partitioned on src ONCE (persisted — InMemoryTableScan keeps
-      outputPartitioning), and the loop pins
-      spark.sql.shuffle.partitions to the same partition count, so
-      EnsureRequirements re-uses the edges' clustering and exchanges
-      ONLY the |V|-row side per join: per-iteration shuffle is O(|V|),
-      independent of |E| (asserted by a byte envelope in
-      tests/test_graph.py; SCALING.md shows the measured bytes).  Right
-      when the rank vector itself is too big to broadcast — the
-      billion-node regime.
-
-    Both arms compute identical 12-dp-rounded ranks (the per-iteration
-    rounding already absorbs summation-order differences ACROSS ENGINES,
-    a stronger condition than across join strategies; equality asserted
-    in tests/test_graph.py).
-
-    Returns (node, rank)."""
+    - ``truncate_every``: eager lineage truncation cadence (the final
+      iteration always truncates); 2 is the knee measured by
+      tools/ab_pagerank_cadence.py — each truncation is a job.
+    - ``tol``: stop early once max |Δrank| < tol; a 12-dp iterate that
+      stops changing is a fixpoint, so the result equals the fixed run.
+    - ``checkpoint_every``: every k-th truncation, and the static node
+      state, use a reliable ``.checkpoint()`` (needs a checkpoint dir)
+      instead of ``localCheckpoint``, which an executor loss cannot
+      recover.
+    - ``join_strategy``: ``'broadcast'`` (default) broadcasts the
+      |V|-row rank state into the persisted edge list, which never
+      moves; ``'copartition'`` shuffles only the |V|-row sides against
+      the src-clustered edge list, for rank vectors too big to
+      broadcast."""
     import os
 
     if join_strategy not in ("broadcast", "copartition"):
@@ -118,158 +105,113 @@ def pagerank(
     # finds the edges already hash-clustered on src at the loop's pinned
     # partition count: only the |V|-row side moves.
     bc = F.broadcast if join_strategy == "broadcast" else (lambda df: df)
-    n_part = os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8")
-    # The edge list is the BIG side of every iteration's join and its key
-    # never changes — hash-partition it on src ONCE and persist().  The
-    # persist matters twice over: it pins the blocks AND (unlike
-    # localCheckpoint, whose LogicalRDD forgets outputPartitioning — the
-    # r6 form re-exchanged the full edge list via SortMergeJoin every
-    # round, measured 150 MB/10-iteration query at sf0.1) it keeps the
-    # repartition node in the plan, so each iteration's join sees the
-    # edges already clustered on src and exchanges ONLY the |V|-row
-    # rank/deg/contrib sides — ~3 MB for the same query, 50× less.
-    # That is the Pregel property that matters when edges are 10⁶× the
-    # rank vector at 100 TB: static edges stay put, only ranks move.
-    # (Explicitly unpersisted after the loop; the returned frame is an
-    # eager checkpoint with no lineage into walk.)
+    n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
+
     def materialize(df: DataFrame) -> DataFrame:
-        """Static loop inputs (nodes, deg): reliable checkpoint when the
-        fault-tolerance knob is on — a localCheckpoint'ed frame re-read
-        by every iteration is exactly the block an executor loss makes
-        unrecoverable — else the (faster) local form."""
+        """Static loop state: reliable checkpoint when the fault-tolerance
+        knob is on, else the (faster) local form."""
         if checkpoint_every:
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
 
-    # r12 (guide §2.4): repartition FIRST, then dedup — the distinct's
-    # ClusteredDistribution(src, dst) is satisfied by hashing on either
-    # single endpoint, so it rides the clustering exchange the loop needs
-    # anyway instead of paying its own (2 exchanges → 1 in the walk
-    # build; set-identical output, and the persisted partitioning the
-    # iterations rely on is preserved through the aggregate).
+    # The edge list (walk) is the big side of every iteration and never
+    # changes: hash-partition it once and persist() — persist keeps the
+    # repartition's outputPartitioning (localCheckpoint forgets it), so
+    # no iteration re-exchanges |E| rows.  Repartition before the
+    # distinct: the dedup's clustering rides the same exchange.
     #
-    # r13 clustering KEY per arm: the broadcast arm's only per-iteration
-    # aggregate is the contribution sum groupBy(dst) — clustering the
-    # resident walk on ``dst`` lets it ride the one-time exchange (the
-    # hits.py half-round move), making the whole iteration exchange-free;
-    # the rank side is broadcast, so src-clustering bought that arm
-    # nothing.  The copartition arm keeps ``src``: there the rank vector
-    # is SHUFFLED to meet the walk each iteration (walk.src == ranks.node)
-    # and src-clustering is what keeps the |E| side unmoved.
+    # Clustering key per arm: the broadcast arm's only per-iteration
+    # aggregate is the contribution sum groupBy(dst), which rides a
+    # dst-clustered walk, so that iteration has no exchange at all.  The
+    # copartition arm shuffles the rank vector to meet the walk on
+    # walk.src == ranks.node, so it clusters on src.
     walk_key = "dst" if join_strategy == "broadcast" else "src"
+    walk = edges.select("src", "dst")
+    if not directed:
+        walk = walk.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    walk = walk.repartition(n_part, walk_key).distinct().persist()
+    nodes = walk.select(F.col("src").alias("node"))
     if directed:
-        walk = (
-            edges.select("src", "dst")
-            .repartition(int(n_part), walk_key)
-            .distinct()
-            .persist()
-        )
-        nodes = materialize(
-            walk.select(F.col("src").alias("node"))
-            .unionByName(walk.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-    else:
-        walk = (
-            edges.select("src", "dst")
-            .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .repartition(int(n_part), walk_key)
-            .distinct()
-            .persist()
-        )
-        nodes = materialize(walk.select(F.col("src").alias("node")).distinct())
-    # Fold out-degree INTO the node state once: every iteration needs
-    # (rank, outdeg) keyed on the same node id, so carrying outdeg in the
-    # rank vector replaces a per-iteration walk⋈deg join (and its
-    # broadcast round) with a column — and makes the directed dangling
-    # mass a WHERE outdeg IS NULL agg instead of an anti-join (r8: A/B'd
-    # ~25% off the 10-iteration wall, bit-identical ranks).  deg itself
-    # rides walk's src-clustering: no exchange to compute.
+        nodes = nodes.unionByName(walk.select(F.col("dst").alias("node")))
+    nodes = nodes.distinct()
+    if seed_mod is None:
+        # the uniform path checkpoints the node list before the statics
+        # build; the seeded path builds straight from the walk (one job
+        # fewer — the statics' own count job materializes both)
+        nodes = materialize(nodes)
+    # Out-degree is folded into the node state once, so no iteration
+    # joins walk⋈deg, and the directed dangling mass is a filter on
+    # outdeg IS NULL.  deg groups the walk by src: the broadcast arm's
+    # dst-clustered walk pays one exchange for it, here, once.
     deg = walk.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     statics = nodes.join(deg, nodes.node == deg.src, "left").select("node", "outdeg")
-    # r13, BROADCAST arm only: persist-clustered statics — persist keeps
-    # outputPartitioning (localCheckpoint forgot it), and that arm's
-    # iteration has NO exchange anywhere (contribs rides the dst-clustered
-    # walk), so the statics ⋈ contribs merge join sees both sides already
-    # hash-partitioned at n_part and needs NO exchange and NO broadcast
-    # build.  The COPARTITION arm measured WORSE with a clustered statics
-    # (3,568 → 8,650 B/iter at sf0.001): its contribs aggregate pays a
-    # real exchange, AQE coalesces that stage below n_part partitions, and
-    # the cached 8-partition statics then mismatches — AQE re-exchanges a
-    # side per iteration.  That arm keeps the r12 shape (checkpointed
-    # statics, both join sides planned as AQE shuffle stages that coalesce
-    # together).  The reliable-checkpoint knob also keeps the r12 shape —
-    # a checkpoint is the fault-tolerance contract.
+    # Broadcast arm: persist statics hash-clustered on node — contribs
+    # arrives hash(dst) riding the walk, so the statics ⋈ contribs merge
+    # join needs neither an exchange nor a broadcast build.  The
+    # copartition arm keeps checkpointed statics: its contribs aggregate
+    # pays a real exchange that AQE coalesces below n_part, and a
+    # clustered statics then mismatches and re-exchanges per iteration
+    # (measured 3,568 → 8,650 B/iter at sf0.001).  Reliable mode keeps
+    # the checkpoint — that is its fault-tolerance contract.
     statics_clustered = join_strategy == "broadcast" and not checkpoint_every
     if statics_clustered:
-        statics = statics.repartition(int(n_part), "node").persist()
+        statics = statics.repartition(n_part, "node").persist()
     else:
         statics = materialize(statics)
-    n_nodes = statics.count()  # one O(|V|) stat job (also materializes the
-    # persisted statics); the teleport term needs the scalar
 
     def truncate(df: DataFrame, it: int) -> DataFrame:
-        """Lineage truncation, every ``truncate_every``-th iteration (the
-        final iteration always truncates so the returned frame is an
-        eager checkpoint with no lineage into the unpersisted walk).
-        Results are cadence-invariant — the 12-dp rounding is IN-PLAN,
-        so a 2-iteration lineage computes the identical bits — but each
-        eager materialization is a scheduled job plus a broadcast round,
-        which at fixture scale is most of an iteration's wall time
-        (A/B'd in SCALING.md; cadence is bounded so failure-recompute
-        and plan growth stay O(truncate_every))."""
+        """Eager lineage truncation every ``truncate_every``-th iteration
+        and always on the last, so the result has no lineage into the
+        unpersisted walk.  Cadence-invariant: the rounding is in-plan."""
         reliable = bool(checkpoint_every) and (it + 1) % checkpoint_every == 0
         if (it + 1) % truncate_every != 0 and it != iters - 1 and not reliable:
             return df  # skip: lineage depth stays < truncate_every
-        if reliable:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
+        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
 
     old_part = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_part)
     try:
-        ranks = statics.withColumn("rank", F.lit(1.0 / n_nodes))
+        # one O(|V|) stat job (also materializes the persisted statics)
+        if seed_mod is None:
+            n_nodes = statics.count()
+            init = F.lit(1.0 / n_nodes)
+            teleport = F.lit((1.0 - damping) / n_nodes)
+        else:
+            is_seed = F.col("node") % seed_mod == 0
+            n_seeds = statics.where(is_seed).count()
+            if n_seeds == 0:
+                raise ValueError("pagerank: empty seed set")
+            init = F.when(is_seed, F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))  # sw
+            teleport = F.lit(1.0 - damping) * init
+        spark.conf.set("spark.sql.shuffle.partitions", n_part)
+        ranks = statics.withColumn("rank", init)
         for it in range(iters):
-            # The rank state (node, outdeg, rank) is a |V|-row frame —
-            # broadcast by default (its ExistingRDD scan carries no
-            # stats, so the planner would SMJ, re-sorting the 70×-bigger
-            # edge list every round: measured 31 MB shuffle / ~7 s vs
-            # 3 MB / ~2.5 s broadcast at sf0.1).
-            # join_strategy='copartition' is the billion-node arm: the
-            # persisted walk keeps its src clustering, so the shuffled
-            # join moves only the |V|-row side.
+            # The (node, outdeg, rank) state carries no stats, so without
+            # the hint the planner would sort-merge the |E|-row walk every
+            # round (measured 31 MB / ~7 s vs 3 MB / ~2.5 s at sf0.1).
             contribs = (
                 walk.join(bc(ranks), walk.src == ranks.node)
                 .groupBy("dst")
                 .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("m"))
             )
-            base = F.lit((1.0 - damping) / n_nodes)
+            base = teleport
             if statics_clustered:
-                # r13 broadcast arm: merge-hinted instead of broadcast —
-                # statics is persisted hash(node, n_part) and contribs
-                # arrives hash(dst, n_part) riding the dst-clustered walk,
-                # so the SMJ is co-partitioned: no exchange, and one
-                # broadcast-build wave per iteration gone (the r12-profiled
-                # driver gap).
+                # co-partitioned merge join: statics hash(node, n_part),
+                # contribs hash(dst, n_part) — no exchange, no broadcast
                 joined = statics.join(
                     contribs.hint("merge"), statics.node == contribs.dst, "left"
                 )
             else:
                 joined = statics.join(bc(contribs), statics.node == contribs.dst, "left")
             if directed:
-                # dangling mass: rank held by nodes with no out-edges —
-                # outdeg is ALREADY in the state vector, so this is a
-                # 1-row filtered agg (no anti-join), attached IN-PLAN as
-                # a broadcast cross join (a driver .first() here would
-                # add a blocking job per iteration; 12-dp rounding keeps
-                # both engines' scalars bit-equal).  The arithmetic
-                # mirrors the oracle's parenthesization exactly:
-                # ((1-d)/n + (d·m_dang)/n) + d·contrib.
+                # dangling mass as a 1-row agg attached in-plan by a
+                # broadcast cross join (collecting it with .first() would
+                # add a job per iteration); parenthesized as the oracles
                 dang = ranks.where(F.col("outdeg").isNull()).agg(
                     F.round(F.coalesce(F.sum("rank"), F.lit(0.0)), 12).alias("mmbd_dang")
                 )
                 joined = joined.crossJoin(F.broadcast(dang))
-                base = base + (F.lit(damping) * F.col("mmbd_dang")) / F.lit(float(n_nodes))
+                lost = F.lit(damping) * F.col("mmbd_dang")
+                base = base + (lost / F.lit(float(n_nodes)) if seed_mod is None else lost * init)
             new_ranks = truncate(
                 joined.select(
                     "node",
@@ -280,19 +222,15 @@ def pagerank(
                 ),
                 it,
             )
+            prev, ranks = ranks, new_ranks
             if tol is not None:
                 delta = (
-                    new_ranks.join(
-                        ranks.select("node", F.col("rank").alias("prev")), "node"
-                    )
+                    ranks.join(prev.select("node", F.col("rank").alias("prev")), "node")
                     .agg(F.max(F.abs(F.col("rank") - F.col("prev"))).alias("d"))
                     .first()["d"]
                 )
-                ranks = new_ranks
                 if delta is not None and delta < tol:
                     break
-            else:
-                ranks = new_ranks
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_part)
         walk.unpersist()  # ranks is an eager checkpoint — no lineage into walk
@@ -301,39 +239,76 @@ def pagerank(
     return ranks.select("node", "rank")  # outdeg is loop-internal state
 
 
-def _sql_pagerank(damping: float = _PR_DAMPING, iters: int = _PR_ITERS) -> str:
-    """The identical power method as unrolled DuckDB CTEs (r0 … r{iters}),
-    over the supplier↔customer trade graph."""
+def _sql_pagerank(
+    damping: float = _PR_DAMPING,
+    iters: int = _PR_ITERS,
+    directed: bool = False,
+    seed_mod: int | None = None,
+) -> str:
+    """pagerank's power method as unrolled DuckDB CTEs r0 … r{iters} over
+    the trade graph, for every teleport and direction mode: the teleport
+    vector is the ``tp`` CTE, and the arithmetic is parenthesized exactly
+    as the Spark side (teleport + dangling share, plus d·contrib, then
+    round 12) so both engines stay bit-identical round by round.
+
+    Directed CTEs are ``AS MATERIALIZED``: r{i} is referenced twice (by
+    md{i+1} and r{i+1}), and DuckDB's default CTE inlining would double
+    the plan per iteration (2¹⁰ edge scans at 10 iterations)."""
     d = damping
-    ctes = [
-        """e AS (
-  SELECT DISTINCT l.l_suppkey * 2 AS src, o.o_custkey * 2 + 1 AS dst
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-),
-ed AS (SELECT src, dst FROM e UNION SELECT dst AS src, src AS dst FROM e),
-deg AS (SELECT src, CAST(count(*) AS DOUBLE) AS outdeg FROM ed GROUP BY src),
-nodes AS (SELECT DISTINCT src AS node FROM ed),
-nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-r0 AS (SELECT node, 1.0 / (SELECT n FROM nn) AS rank FROM nodes)"""
+    as_ = "AS MATERIALIZED" if directed else "AS"
+    if directed:
+        ctes = [
+            f"ed {as_} (\n  {_TRADE_EDGES_SQL}\n)",
+            f"nodes {as_} (SELECT src AS node FROM ed UNION SELECT dst AS node FROM ed)",
+        ]
+    else:
+        ctes = [
+            f"e AS (\n  {_TRADE_EDGES_SQL}\n)",
+            "ed AS (SELECT src, dst FROM e UNION SELECT dst AS src, src AS dst FROM e)",
+            "nodes AS (SELECT DISTINCT src AS node FROM ed)",
+        ]
+    ctes += [
+        f"deg {as_} (SELECT src, CAST(count(*) AS DOUBLE) AS outdeg FROM ed GROUP BY src)",
+        "nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes)",
+    ]
+    if seed_mod is None:
+        w = "1.0 / (SELECT n FROM nn)"
+        teleport, share = f"{1.0 - d} / (SELECT n FROM nn)", "/ (SELECT n FROM nn)"
+    else:
+        ctes.append(
+            f"ns AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes WHERE node % {seed_mod} = 0)"
+        )
+        w = f"CASE WHEN node % {seed_mod} = 0 THEN 1.0 / (SELECT n FROM ns) ELSE 0.0 END"
+        teleport, share = f"{1.0 - d} * tp.w", "* tp.w"
+    ctes += [
+        f"tp {as_} (SELECT node, {w} AS w FROM nodes)",
+        f"r0 {as_} (SELECT node, w AS rank FROM tp)",
     ]
     for i in range(1, iters + 1):
+        base = teleport
+        if directed:
+            ctes.append(
+                f"""md{i} {as_} (
+  SELECT round(coalesce(sum(rank), 0.0), 12) AS m FROM r{i - 1}
+  WHERE node NOT IN (SELECT src FROM ed)
+)"""
+            )
+            base = f"({teleport} + ({d} * (SELECT m FROM md{i})) {share})"
         ctes.append(
-            f"""r{i} AS (
-  SELECT nodes.node,
-         round({1.0 - d} / (SELECT n FROM nn) + {d} * coalesce(s.m, 0.0), 12) AS rank
-  FROM nodes LEFT JOIN (
+            f"""r{i} {as_} (
+  SELECT tp.node, round({base} + {d} * coalesce(s.m, 0.0), 12) AS rank
+  FROM tp LEFT JOIN (
     SELECT ed.dst AS node, sum(r{i - 1}.rank / deg.outdeg) AS m
     FROM ed JOIN r{i - 1} ON ed.src = r{i - 1}.node JOIN deg ON deg.src = ed.src
     GROUP BY ed.dst
-  ) s ON nodes.node = s.node
+  ) s ON tp.node = s.node
 )"""
         )
     return (
         "WITH "
         + ",\n".join(ctes)
         + f"""
-SELECT CASE WHEN node % 2 = 0 THEN 'supplier' ELSE 'customer' END AS kind,
-       CAST(node // 2 AS BIGINT) AS key,
+SELECT {_decode_sql()},
        round(rank, 6) AS rank
 FROM r{iters}
 """
@@ -360,14 +335,19 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _decode_ranks(ranks: DataFrame) -> DataFrame:
-    """(node, rank) → (kind, key, rank): undo trade_edges' 2k/2k+1 node
-    encoding and round for the 6-dp oracle comparison."""
-    return ranks.select(
+def _decode_node() -> list:
+    """(kind, key) columns undoing trade_edges' node encoding (supplier
+    2k, customer 2k+1) of the ``node`` column."""
+    return [
         F.when(F.col("node") % 2 == 0, F.lit("supplier")).otherwise(F.lit("customer")).alias("kind"),
         (F.col("node") / 2).cast("long").alias("key"),
-        F.round("rank", 6).alias("rank"),
-    )
+    ]
+
+
+def _decode_ranks(ranks: DataFrame) -> DataFrame:
+    """(node, rank) → (kind, key, rank), rounded for the 6-dp oracle
+    comparison."""
+    return ranks.select(*_decode_node(), F.round("rank", 6).alias("rank"))
 
 
 @register("q_pagerank", oracle=_sql_pagerank())
@@ -398,62 +378,7 @@ def q_pagerank_copart(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_pagerank_directed(damping: float = _PR_DAMPING, iters: int = _PR_ITERS) -> str:
-    """The directed power method with uniform dangling-mass
-    re-distribution as unrolled DuckDB CTEs — every customer node is
-    dangling by construction (supplier→customer edges only), so the
-    dangling scalar is exercised hard, not incidentally.  Arithmetic is
-    ordered EXACTLY as the Spark side (((1-d)/n + (d·m_dang)/n) +
-    d·contrib, then round 12) so both engines stay bit-identical.
-
-    Every per-iteration CTE is ``AS MATERIALIZED``: r{i} is referenced
-    TWICE (by md{i+1} and r{i+1}), so DuckDB's default CTE inlining
-    doubles the expression tree per iteration — 2¹⁰ copies of the edge
-    scan at 10 iterations, which both exhausts file handles and blows
-    planning time.  Materialization keeps the unrolled plan linear,
-    matching Spark's per-round localCheckpoint."""
-    d = damping
-    ctes = [
-        """ed AS MATERIALIZED (
-  SELECT DISTINCT l.l_suppkey * 2 AS src, o.o_custkey * 2 + 1 AS dst
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-),
-deg AS MATERIALIZED (SELECT src, CAST(count(*) AS DOUBLE) AS outdeg FROM ed GROUP BY src),
-nodes AS MATERIALIZED (SELECT src AS node FROM ed UNION SELECT dst AS node FROM ed),
-nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-r0 AS MATERIALIZED (SELECT node, 1.0 / (SELECT n FROM nn) AS rank FROM nodes)"""
-    ]
-    for i in range(1, iters + 1):
-        ctes.append(
-            f"""md{i} AS MATERIALIZED (
-  SELECT round(coalesce(sum(rank), 0.0), 12) AS m FROM r{i - 1}
-  WHERE node NOT IN (SELECT src FROM ed)
-),
-r{i} AS MATERIALIZED (
-  SELECT nodes.node,
-         round(({1.0 - d} / (SELECT n FROM nn)
-                + ({d} * (SELECT m FROM md{i})) / (SELECT n FROM nn))
-               + {d} * coalesce(s.m, 0.0), 12) AS rank
-  FROM nodes LEFT JOIN (
-    SELECT ed.dst AS node, sum(r{i - 1}.rank / deg.outdeg) AS m
-    FROM ed JOIN r{i - 1} ON ed.src = r{i - 1}.node JOIN deg ON deg.src = ed.src
-    GROUP BY ed.dst
-  ) s ON nodes.node = s.node
-)"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""
-SELECT CASE WHEN node % 2 = 0 THEN 'supplier' ELSE 'customer' END AS kind,
-       CAST(node // 2 AS BIGINT) AS key,
-       round(rank, 6) AS rank
-FROM r{iters}
-"""
-    )
-
-
-@register("q_pagerank_directed", oracle=_sql_pagerank_directed())
+@register("q_pagerank_directed", oracle=_sql_pagerank(directed=True))
 def q_pagerank_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed PageRank with dangling-mass handling (VERDICT r6 item 7):
     the supplier→customer trade graph walked one way, so EVERY customer
@@ -1086,8 +1011,7 @@ def _sql_degree_powerlaw() -> str:
     sums = ", ".join(f"{t} AS {k}" for k, t in _SUMS.items())
     return f"""
 WITH e AS (
-  SELECT DISTINCT l_suppkey * 2 AS src, o_custkey * 2 + 1 AS dst
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+  {_TRADE_EDGES_SQL}
 ),
 deg AS (
   SELECT node, count(*) AS d
@@ -1135,311 +1059,164 @@ def q_degree_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _fit(points, [], _POWERLAW_SELECTS)
 
 
+# ------------------------------------------------------------ frontier relaxation
+#
+# BFS, widest path and shortest path are one monotone relaxation over a
+# semiring (GraphBLAS form): (min, +1), (max, min) and (min, +).  Each is
+# a Semiring spec below; one Spark loop (frontier_relax), one unrolled
+# DuckDB oracle (_sql_frontier) and one fixpoint certificate
+# (_certify_fixpoint) are generated from the spec.
+
 _BFS_ROUNDS = 6  # fixed unroll; the trade graph settles in ≤3 (dense bipartite)
+_WP_ROUNDS = 8  # max-min improves through longer paths than BFS levels:
+#                 measured fixpoint 5 rounds at sf0.001/0.01, 7 at sf0.1
+_WP_SEED_CAP = 1 << 40  # seed sentinel, far above any edge weight
+_SP_ROUNDS = 10  # min-plus can improve through paths longer than the hop
+#                  diameter; fixtures settle in <= 5 (sf0.001/0.01/0.1)
+_SP_COST = "1000000 // w + 1"  # inverse-strength latency: strong links cheap
 
 
-def bfs_hops(
-    edges: DataFrame, seeds: DataFrame, rounds: int = _BFS_ROUNDS, truncate: bool = True,
+class Semiring(NamedTuple):
+    """A monotone relaxation x'(v) = agg(x(v), agg over edges (u, v) of
+    cand(x(u), edge)).  ``cand`` and ``agg`` are SQL text shared by the
+    Spark loop, the oracle and the certificate; a candidate improves a
+    vertex when it is strictly better in ``agg``'s order (< for min,
+    > for max).  All values are integers, so both engines agree exactly."""
+
+    query: str  # the registered query (certificate messages)
+    col: str  # state value column
+    out: str  # the query's output column
+    weight: str | None  # edge-weight select item over the trade graph's
+    #                     order count ``w``; None for unit weights
+    cand: str  # candidate over ``col`` and the edge columns
+    agg: str  # "min" or "max"
+    seed: int  # the seeds' state value
+    rounds: int  # fixed unroll: default loop bound and oracle depth
+    knob: str  # the constant to raise when the unroll stops short
+
+
+BFS = Semiring(
+    query="q_bfs_hops", col="dist", out="dist", weight=None,
+    cand="dist + 1", agg="min", seed=0, rounds=_BFS_ROUNDS, knob="_BFS_ROUNDS",
+)
+WIDEST = Semiring(
+    query="q_widest_path", col="cap", out="capacity", weight="w",
+    cand="least(cap, w)", agg="max", seed=_WP_SEED_CAP, rounds=_WP_ROUNDS, knob="_WP_ROUNDS",
+)
+SHORTEST = Semiring(
+    query="q_shortest_path", col="dist", out="dist", weight=f"{_SP_COST} AS cost",
+    cand="dist + cost", agg="min", seed=0, rounds=_SP_ROUNDS, knob="_SP_ROUNDS",
+)
+
+
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """Both directions of every ``(src, dst, weights...)`` edge."""
+    w = [c for c in edges.columns if c not in ("src", "dst")]
+    return edges.select("src", "dst", *w).unionAll(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *w)
+    )
+
+
+def _relax(sym: DataFrame, vec: DataFrame, spec: Semiring) -> DataFrame:
+    """One semiring mat-vec: (node, cand), the best candidate each vertex
+    receives from ``vec``'s (node, col) rows.  ``vec`` is broadcast, so
+    the edge list never moves."""
+    return (
+        sym.join(F.broadcast(vec.withColumnRenamed("node", "src")), "src")
+        .select(F.col("dst").alias("node"), F.expr(spec.cand).alias("cand"))
+        .groupBy("node")
+        .agg(F.expr(f"{spec.agg}(cand)").alias("cand"))
+    )
+
+
+def _improves(spec: Semiring):
+    """True where ``cand`` is strictly better than the state value (or
+    the state has none) in ``spec.agg``'s order."""
+    op = "<" if spec.agg == "min" else ">"
+    return F.col("cand").isNotNull() & (
+        F.col(spec.col).isNull() | F.expr(f"cand {op} {spec.col}")
+    )
+
+
+def frontier_relax(
+    edges: DataFrame,
+    seeds: DataFrame,
+    spec: Semiring,
+    rounds: int | None = None,
+    truncate: bool = True,
     report_fixpoint: bool = False,
-) -> DataFrame:
-    """Multi-source BFS hop distance over an undirected edge list
-    ``(src, dst)`` from a ``(node)`` seed set: returns (node, dist) for
-    every vertex reachable within ``rounds`` hops, dist = exact shortest
-    hop count (unit weights, so first-reach == minimal).
+):
+    """``spec``'s relaxation from a ``(node)`` seed set over an undirected
+    edge list ``(src, dst[, weight columns spec.cand reads])``; returns
+    (node, spec.col) for every vertex reached within ``rounds`` (default
+    ``spec.rounds``).
 
-    Scale shape (the delta/frontier form, NOT whole-vector relaxation):
-    each round joins the edge list against ONLY the newly-settled
-    frontier — per-round shuffle is O(|frontier| · avg-degree), not
-    O(|V|) — then anti-joins the visited set to keep first reaches.
-    Frontier and visited state are localCheckpoint'ed per round (swap
-    for .checkpoint() cadence on a real cluster, the graph.pagerank
-    discipline), so iteration k never re-plans k-1 predecessors.  At
-    100 TB this is the standard Pregel BFS: O(diameter) passes, each
-    linear in the edges actually touched.  ``truncate=False`` keeps the
-    full lineage (results identical — integer monotone relaxation is
-    cadence-invariant) so plan-shape tests can inspect the per-round
-    join strategy that eager checkpoints otherwise materialize away.
+    Delta/frontier form: each round relaxes only from the vertices that
+    improved in the previous round, so per-round work is
+    O(|frontier|·degree), not O(|E|).  Values only move one way, so this
+    reaches the same fixpoint as whole-vector relaxation (the oracle's
+    form).  Under BFS's unit weights first reach is final, so the merge
+    admits exactly the newly reached vertices.
 
-    Determinism/oracle contract: all-integer, monotone (a settled dist
-    never changes), fixed round count ≥ the measured fixpoint — the
-    identically-unrolled DuckDB min-relaxation CTEs agree exactly
-    (min-over-union relaxation and frontier first-reach compute the
-    same BFS levels).  The caller certifies fixpoint (q_bfs_hops runs
-    one extra expansion and fails loudly on any improvement) so a
-    regenerated fixture needing deeper search cannot hash green
-    wrong-together (the q_kcore / ADVICE-r9 lesson).
+    State discipline: the symmetric edge list is hash-clustered on
+    ``dst`` once and persisted (persist keeps outputPartitioning), so the
+    per-round groupBy(node = dst) rides that exchange; each round is one
+    full-outer merge of the state with the relaxed candidates, eagerly
+    localCheckpoint'ed (a persist-chained state grows its plan every
+    round — measured: out of JVM heap at 8 rounds).  ``truncate=False`` skips
+    the checkpoints and the persist, leaving each round's join shape
+    visible to plan tests (identical results).
 
-    ``report_fixpoint=True`` returns ``(dist, observed)`` where
-    ``observed`` records whether the loop SAW an empty frontier.  An
-    empty frontier is itself a fixpoint PROOF, not just a stopping
-    heuristic: every settled node entered some round's frontier when its
-    distance last improved and was expanded in the following round, so
-    by the time a frontier comes back empty, every (settled node →
-    neighbor) relaxation has already been offered and rejected — a full
-    re-expansion of the settled set can improve nothing.  Callers that
-    otherwise pay an O(|E|) certificate join (q_bfs_hops and the
-    widest/shortest twins) skip it when ``observed`` is True and run it
-    only on the uncertified path (loop exhausted ``rounds`` with a
-    non-empty frontier) — measured r12: the certificate was ~1/4 of
-    q_bfs_hops' wall at sf0.1.
-
-    r13 state discipline (guide §2.4, the label_prop/hits move): the
-    symmetric edge list is hash-clustered on ``dst`` ONCE and persisted
-    (persist keeps outputPartitioning; localCheckpoint forgets it — the
-    graph.pagerank lesson), so each round's expansion aggregate
-    groupBy(node=dst) rides that one-time exchange instead of paying a
-    message-volume exchange per round, and the per-round first-reach
-    anti-join + union pair is collapsed into ONE full-outer merge
-    (coalesce keeps the settled value — first reach is final under unit
-    weights, so the merge is value-identical to anti-join + union):
-    2 joins + 2 eager checkpoints per round become 1 + 1.  The merged
-    state is eagerly localCheckpoint'ed per round — a persist-chained
-    state was A/B'd and REJECTED: it keeps hash(node) clustering (the
-    merge's state side pays no exchange) but every round's lineage
-    references the previous round's plan, so analysis + cache-lookup
-    work grows per round and the plan STRING grows exponentially when
-    both the state and frontier reference it (measured: driver OOM at
-    8 rounds in a bare session; a frontier-leaf variant still ran
-    rounds 6-7 at 2-4× the flat-checkpoint cost).  The checkpointed
-    state costs one |V|-row exchange per round inside the merge —
-    negligible next to the removed message-volume exchange
-    (probe: 8.1 s chained-persist vs 5.1 s flat checkpoint, sf0.1)."""
+    ``report_fixpoint=True`` returns ``(state, observed)``: ``observed``
+    is True when a round improved nothing.  That is a fixpoint proof —
+    every vertex was relaxed from after its last improvement — so the
+    O(|E|) _certify_fixpoint is needed only when it is False."""
     import os
 
     n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
     ck = (lambda df: df.localCheckpoint(eager=True)) if truncate else (lambda df: df)
-    sym = edges.select("src", "dst").unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).repartition(n_part, "dst")
+    sym = _symmetric(edges).repartition(n_part, "dst")
     if truncate:
         sym = sym.persist()
-    dist = ck(seeds.select("node", F.lit(0).cast("long").alias("dist")))
-    frontier = dist
+    state = ck(seeds.select("node", F.lit(spec.seed).cast("long").alias(spec.col)))
+    frontier = state
     observed_fixpoint = False
+    better = _improves(spec)
     try:
-        for r in range(rounds):
-            reached = (
-                sym.join(F.broadcast(frontier.withColumnRenamed("node", "src")), "src")
-                .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("cand"))
-                .groupBy("node")
-                .agg(F.min("cand").alias("cand"))
-            )
-            # full-outer merge == anti-join + union: a settled dist is
-            # final (unit-weight first reach is minimal), so
-            # coalesce(dist, cand) keeps every settled row unchanged and
-            # admits exactly the first-reached nodes — bit-identical rows
+        for _ in range(spec.rounds if rounds is None else rounds):
             merged = ck(
-                dist.join(reached, "node", "full_outer").select(
+                state.join(_relax(sym, frontier, spec), "node", "full_outer").select(
                     "node",
-                    F.coalesce(F.col("dist"), F.col("cand")).alias("dist"),
-                    (F.col("dist").isNull() & F.col("cand").isNotNull()).alias("mmbd_new"),
+                    F.when(better, F.col("cand")).otherwise(F.col(spec.col)).alias(spec.col),
+                    better.alias("mmbd_new"),
                 )
             )
-            new = merged.where(F.col("mmbd_new")).select("node", "dist")
-            dist = merged.select("node", "dist")
-            if truncate and new.isEmpty():
-                # empty frontier = fixpoint: every remaining round relaxes
-                # nothing, so stopping returns the identical fixed-unroll
-                # result (the label_prop short-circuit discipline).  The
-                # probe (isEmpty over the round's checkpoint blocks) runs
-                # EVERY round since r12: besides the skipped rounds it
-                # also buys the caller's O(|E|) certificate skip (see
-                # report_fixpoint above).  Only on the truncating path —
-                # truncate=False exists for plan-shape tests that must
-                # see every round's join shape.
+            frontier = merged.where(F.col("mmbd_new")).select("node", spec.col)
+            state = merged.select("node", spec.col)
+            if truncate and frontier.isEmpty():
+                # fixpoint: the remaining rounds are no-ops
                 observed_fixpoint = True
                 break
-            frontier = new
     finally:
         if truncate:
-            sym.unpersist()  # dist is a projection of an eager checkpoint
-    return (dist, observed_fixpoint) if report_fixpoint else dist
+            sym.unpersist()  # state is a projection of an eager checkpoint
+    return (state, observed_fixpoint) if report_fixpoint else state
 
 
-def _sql_bfs_hops(rounds: int = _BFS_ROUNDS) -> str:
-    """The identical BFS as unrolled min-relaxation CTEs over the trade
-    graph (monotone integer relaxation: min-over-union per round equals
-    the frontier algorithm's first-reach levels)."""
-    ctes = [
-        """e AS MATERIALIZED (
-  SELECT DISTINCT l.l_suppkey * 2 AS src, o.o_custkey * 2 + 1 AS dst
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-),
-ed AS MATERIALIZED (SELECT src, dst FROM e UNION SELECT dst AS src, src AS dst FROM e),
-d0 AS (SELECT DISTINCT src AS node, 0 AS dist FROM ed WHERE src % 20 = 0)"""
-    ]
-    for i in range(1, rounds + 1):
-        ctes.append(
-            f"""d{i} AS MATERIALIZED (
-  SELECT node, min(dist) AS dist FROM (
-    SELECT node, dist FROM d{i - 1}
-    UNION ALL
-    SELECT ed.dst AS node, d.dist + 1 AS dist
-    FROM ed JOIN d{i - 1} d ON ed.src = d.node
-  ) GROUP BY node
-)"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""
-SELECT CASE WHEN node % 2 = 0 THEN 'supplier' ELSE 'customer' END AS kind,
-       CAST(node // 2 AS BIGINT) AS key,
-       CAST(dist AS BIGINT) AS dist
-FROM d{rounds}
-"""
-    )
-
-
-def _certify_bfs_fixpoint(edges: DataFrame, dist: DataFrame) -> None:
-    """The O(|E|) BFS fixpoint certificate: expand the FULL settled set
-    once; raise if anything improves.  Called by q_bfs_hops only on the
-    uncertified path (loop exhausted its unroll without an observed
-    empty frontier); tested directly on an under-iterated dist."""
-    sym = edges.unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    relaxed = (
-        sym.join(dist.withColumnRenamed("node", "src"), "src")
-        .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("cand"))
-        .groupBy("node")
-        .agg(F.min("cand").alias("cand"))
-    )
+def _certify_fixpoint(edges: DataFrame, state: DataFrame, spec: Semiring) -> None:
+    """The O(|E|) fixpoint certificate: relax the FULL state once and
+    raise if any vertex improves."""
     improved = (
-        relaxed.join(dist, "node", "left_outer")
-        .where(F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
+        _relax(_symmetric(edges), state, spec)
+        .join(state, "node", "left_outer")
+        .where(_improves(spec))
         .count()
     )
     if improved:
         raise AssertionError(
-            f"q_bfs_hops: {improved} vertices still improvable after "
-            f"{_BFS_ROUNDS} rounds — raise _BFS_ROUNDS for this fixture"
+            f"{spec.query}: {improved} vertices still improvable after "
+            f"{spec.rounds} rounds — raise {spec.knob} for this fixture"
         )
-
-
-@register(
-    "q_bfs_hops",
-    oracle=_sql_bfs_hops(),
-    post_check=_unroll_stability_check(_sql_bfs_hops, _BFS_ROUNDS, "_BFS_ROUNDS"),
-)
-def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-source BFS hop distance over the supplier↔customer trade
-    graph (bfs_hops over trade_edges): every vertex's exact shortest
-    hop count from the seed set (suppliers with suppkey % 10 == 0) —
-    the graph-distance primitive beside q_pagerank's centrality and
-    q_kcore's density (reachability tiers, blast-radius analysis,
-    influence hops).  ORACLE-CHECKED via identically-unrolled
-    min-relaxation CTEs (all-integer, monotone, fixed unroll — see
-    bfs_hops' contract).  Fixpoint is CERTIFIED in-query: one extra
-    frontier expansion after the fixed rounds must reach nothing new,
-    else the query raises instead of letting Spark and the
-    identically-truncated oracle hash green wrong-together."""
-    edges = trade_edges(spark, sf_dir)
-    seeds = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .where(F.col("node") % 20 == 0)
-        .distinct()
-    )
-    dist, at_fixpoint = bfs_hops(edges, seeds, report_fixpoint=True)
-    # Fixpoint certificate: expanding the full settled set once more
-    # must improve nothing (monotone relaxation => this proves ALL
-    # shortest paths within the unroll are final).  When the loop itself
-    # OBSERVED an empty frontier, that observation is already a proof of
-    # the same fact (every settled node was expanded after its last
-    # improvement — see bfs_hops' report_fixpoint contract), so the
-    # O(|E|) certificate join runs only on the uncertified path: loop
-    # exhausted _BFS_ROUNDS while still improving (r12 optimization;
-    # tests/test_graph.py::test_frontier_certificate_fires_when_rounds_short
-    # pins that the certificate still fires there).
-    if not at_fixpoint:
-        _certify_bfs_fixpoint(edges, dist)
-    return dist.select(
-        F.when(F.col("node") % 2 == 0, F.lit("supplier"))
-        .otherwise(F.lit("customer"))
-        .alias("kind"),
-        (F.col("node") / 2).cast("long").alias("key"),
-        F.col("dist").cast("long").alias("dist"),
-    )
-
-
-_WP_ROUNDS = 8  # fixed unroll; max-min relaxation improves through longer
-# paths than BFS levels — measured fixpoint: 5 rounds at sf0.001/0.01,
-# 7 at sf0.1 (post-fixpoint rounds cost ~nothing: the frontier is empty);
-# the in-query certificate fails loudly if a fixture ever needs >8
-_WP_SEED_CAP = 1 << 40  # seed sentinel, far above any edge weight
-
-
-def widest_path(edges_w: DataFrame, seeds: DataFrame, rounds: int = _WP_ROUNDS,
-                truncate: bool = True, report_fixpoint: bool = False) -> DataFrame:
-    """Maximum-bottleneck (widest-path) capacity from a seed set over a
-    weighted undirected edge list ``(src, dst, w)``: cap(v) = max over
-    paths of the minimum edge weight — the supply-chain robustness /
-    max-flow-lite primitive.  Same delta/frontier shape as bfs_hops
-    (per-round work O(|frontier|·deg)); caps only ever INCREASE, so
-    propagating from improved nodes alone reaches the same monotone
-    fixpoint as whole-vector relaxation (the unrolled oracle's form) —
-    all-integer, so the engines agree exactly.
-
-    ``report_fixpoint=True`` returns ``(cap, observed)`` — same contract
-    and proof as bfs_hops: every improved node re-enters the frontier
-    and is expanded the following round, so an observed empty frontier
-    means every (settled → neighbor) relaxation was already offered and
-    rejected; the caller's O(|E|) certificate join is redundant then.
-
-    r13 state discipline: identical to bfs_hops — sym persisted
-    hash(dst) once (the expansion aggregate rides it, no per-round
-    message exchange), the improved-detect + state-update pair
-    (left-outer join, anti-join, union) collapsed into ONE full-outer
-    merge (max-monotone: the merged value is cand exactly when it
-    improves on the settled cap, else the settled cap — value-identical
-    rows), per-round state eagerly checkpointed (flat plans; see
-    bfs_hops for why a persist-chained state was rejected)."""
-    import os
-
-    n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
-    ck = (lambda df: df.localCheckpoint(eager=True)) if truncate else (lambda df: df)
-    sym = edges_w.select("src", "dst", "w").unionAll(
-        edges_w.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    ).repartition(n_part, "dst")
-    if truncate:
-        sym = sym.persist()
-    cap = ck(seeds.select("node", F.lit(_WP_SEED_CAP).cast("long").alias("cap")))
-    frontier = cap
-    observed_fixpoint = False
-    imp = F.col("cand").isNotNull() & (F.col("cap").isNull() | (F.col("cand") > F.col("cap")))
-    try:
-        for r in range(rounds):
-            reached = (
-                sym.join(F.broadcast(frontier.withColumnRenamed("node", "src")), "src")
-                .select(
-                    F.col("dst").alias("node"),
-                    F.least(F.col("cap"), F.col("w")).alias("cand"),
-                )
-                .groupBy("node")
-                .agg(F.max("cand").alias("cand"))
-            )
-            merged = ck(
-                cap.join(reached, "node", "full_outer").select(
-                    "node",
-                    F.when(imp, F.col("cand")).otherwise(F.col("cap")).alias("cap"),
-                    imp.alias("mmbd_new"),
-                )
-            )
-            improved = merged.where(F.col("mmbd_new")).select("node", "cap")
-            cap = merged.select("node", "cap")
-            if truncate and improved.isEmpty():
-                # empty frontier = monotone fixpoint; rest are no-ops.
-                # Probed every round since r12 — besides skipped rounds the
-                # probe buys the caller's certificate skip (report_fixpoint
-                # above).
-                observed_fixpoint = True
-                break
-            frontier = improved
-    finally:
-        if truncate:
-            sym.unpersist()  # cap is a projection of an eager checkpoint
-    return (cap, observed_fixpoint) if report_fixpoint else cap
 
 
 def trade_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1457,29 +1234,35 @@ def trade_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_widest_path(rounds: int = _WP_ROUNDS) -> str:
-    """The identical max-min relaxation unrolled into DuckDB CTEs."""
-    ctes = [
-        f"""e AS MATERIALIZED (
-  SELECT l.l_suppkey * 2 AS src, o.o_custkey * 2 + 1 AS dst,
+def _sql_frontier(spec: Semiring, rounds: int | None = None) -> str:
+    """``spec``'s relaxation from the seed suppliers, unrolled into
+    whole-vector DuckDB CTEs over the trade graph."""
+    rounds = spec.rounds if rounds is None else rounds
+    c, w = spec.col, f", {spec.weight}" if spec.weight else ""
+    e = _TRADE_EDGES_SQL if spec.weight is None else (
+        """SELECT l.l_suppkey * 2 AS src, o.o_custkey * 2 + 1 AS dst,
          count(DISTINCT l.l_orderkey) AS w
   FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-  GROUP BY src, dst
+  GROUP BY src, dst"""
+    )
+    ctes = [
+        f"""e AS MATERIALIZED (
+  {e}
 ),
 ed AS MATERIALIZED (
-  SELECT src, dst, w FROM e UNION ALL SELECT dst AS src, src AS dst, w FROM e
+  SELECT src, dst{w} FROM e UNION ALL SELECT dst AS src, src AS dst{w} FROM e
 ),
-c0 AS (SELECT DISTINCT src AS node, CAST({_WP_SEED_CAP} AS BIGINT) AS cap
-       FROM ed WHERE src % 20 = 0)"""
+x0 AS (SELECT DISTINCT src AS node, CAST({spec.seed} AS BIGINT) AS {c}
+       FROM ed WHERE src % {_SEED_MOD} = 0)"""
     ]
     for i in range(1, rounds + 1):
         ctes.append(
-            f"""c{i} AS MATERIALIZED (
-  SELECT node, max(cap) AS cap FROM (
-    SELECT node, cap FROM c{i - 1}
+            f"""x{i} AS MATERIALIZED (
+  SELECT node, {spec.agg}({c}) AS {c} FROM (
+    SELECT node, {c} FROM x{i - 1}
     UNION ALL
-    SELECT ed.dst AS node, least(c.cap, ed.w) AS cap
-    FROM ed JOIN c{i - 1} c ON ed.src = c.node
+    SELECT ed.dst AS node, {spec.cand} AS {c}
+    FROM ed JOIN x{i - 1} ON ed.src = x{i - 1}.node
   ) GROUP BY node
 )"""
         )
@@ -1487,71 +1270,75 @@ c0 AS (SELECT DISTINCT src AS node, CAST({_WP_SEED_CAP} AS BIGINT) AS cap
         "WITH "
         + ",\n".join(ctes)
         + f"""
-SELECT CASE WHEN node % 2 = 0 THEN 'supplier' ELSE 'customer' END AS kind,
-       CAST(node // 2 AS BIGINT) AS key,
-       CAST(cap AS BIGINT) AS capacity
-FROM c{rounds}
+SELECT {_decode_sql()},
+       CAST({c} AS BIGINT) AS {spec.out}
+FROM x{rounds}
 """
     )
 
 
-def _certify_widest_fixpoint(ew: DataFrame, cap: DataFrame) -> None:
-    """Max-min twin of _certify_bfs_fixpoint (one full relaxation of the
-    settled capacities; raise on any improvement)."""
-    sym = ew.unionAll(
-        ew.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+def _register_frontier(spec: Semiring):
+    """Register a frontier query with its unrolled oracle and the
+    sweep's one-extra-round stability check."""
+    return register(
+        spec.query,
+        oracle=_sql_frontier(spec),
+        post_check=_unroll_stability_check(partial(_sql_frontier, spec), spec.rounds, spec.knob),
     )
-    relaxed = (
-        sym.join(cap.withColumnRenamed("node", "src"), "src")
-        .select(F.col("dst").alias("node"), F.least(F.col("cap"), F.col("w")).alias("cand"))
-        .groupBy("node")
-        .agg(F.max("cand").alias("cand"))
-    )
-    improved = (
-        relaxed.join(cap, "node", "left_outer")
-        .where(F.col("cap").isNull() | (F.col("cand") > F.col("cap")))
-        .count()
-    )
-    if improved:
-        raise AssertionError(
-            f"q_widest_path: {improved} vertices still improvable after "
-            f"{_WP_ROUNDS} rounds — raise _WP_ROUNDS for this fixture"
+
+
+def _frontier_query(spark: SparkSession, sf_dir: str, spec: Semiring) -> DataFrame:
+    """``spec`` relaxed from the seed suppliers (suppkey % 10 == 0) over
+    the trade graph, fixpoint certified in-query: unless the loop observed
+    an empty frontier, the certificate runs and raises instead of letting
+    Spark and the identically-unrolled oracle hash green wrong together."""
+    if spec.weight is None:
+        edges = trade_edges(spark, sf_dir)
+    else:
+        edges = trade_edges_weighted(spark, sf_dir).selectExpr(
+            "src", "dst", spec.weight.replace("//", " DIV ")
         )
-
-
-@register(
-    "q_widest_path",
-    oracle=_sql_widest_path(),
-    post_check=_unroll_stability_check(_sql_widest_path, _WP_ROUNDS, "_WP_ROUNDS"),
-)
-def q_widest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximum-bottleneck capacity from the seed suppliers (suppkey %
-    10 == 0) over the ORDER-WEIGHTED trade graph: each vertex's widest
-    path back to a seed, where a path's capacity is its weakest link
-    (distinct shared orders) — the supply-chain robustness metric
-    beside q_bfs_hops' hop distance.  ORACLE-CHECKED via identically-
-    unrolled max-min relaxation CTEs (all-integer, monotone); fixpoint
-    CERTIFIED in-query with one extra relaxation, the q_bfs_hops
-    discipline.  Seeds carry the 2^40 sentinel capacity."""
-    ew = trade_edges_weighted(spark, sf_dir)
     seeds = (
-        ew.select(F.col("src").alias("node"))
-        .unionAll(ew.select(F.col("dst").alias("node")))
-        .where(F.col("node") % 20 == 0)
+        edges.select(F.col("src").alias("node"))
+        .unionAll(edges.select(F.col("dst").alias("node")))
+        .where(F.col("node") % _SEED_MOD == 0)
         .distinct()
     )
-    cap, at_fixpoint = widest_path(ew, seeds, report_fixpoint=True)
-    # certificate only on the uncertified path — an observed empty
-    # frontier is already a fixpoint proof (see q_bfs_hops' comment)
+    state, at_fixpoint = frontier_relax(edges, seeds, spec, report_fixpoint=True)
     if not at_fixpoint:
-        _certify_widest_fixpoint(ew, cap)
-    return cap.select(
-        F.when(F.col("node") % 2 == 0, F.lit("supplier"))
-        .otherwise(F.lit("customer"))
-        .alias("kind"),
-        (F.col("node") / 2).cast("long").alias("key"),
-        F.col("cap").cast("long").alias("capacity"),
-    )
+        _certify_fixpoint(edges, state, spec)
+    return state.select(*_decode_node(), F.col(spec.col).cast("long").alias(spec.out))
+
+
+@_register_frontier(BFS)
+def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-source BFS hop distance over the supplier↔customer trade
+    graph: every vertex's exact shortest hop count from the seed
+    suppliers — the graph-distance primitive beside q_pagerank's
+    centrality and q_kcore's density (reachability tiers, blast-radius
+    analysis).  The (min, +1) case of _frontier_query."""
+    return _frontier_query(spark, sf_dir, BFS)
+
+
+@_register_frontier(WIDEST)
+def q_widest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Maximum-bottleneck capacity from the seed suppliers over the
+    order-weighted trade graph: each vertex's widest path back to a seed,
+    where a path's capacity is its weakest link (distinct shared orders)
+    — the supply-chain robustness metric.  Seeds carry the 2^40 sentinel
+    capacity.  The (max, min) case of _frontier_query."""
+    return _frontier_query(spark, sf_dir, WIDEST)
+
+
+@_register_frontier(SHORTEST)
+def q_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weighted shortest-path (Bellman-Ford) distance from the seed
+    suppliers over the trade graph with inverse-strength costs (cost =
+    1e6//w + 1: the more shared orders, the cheaper the hop) — min-plus
+    takes longer-than-diameter paths when many strong links beat one
+    weak one, which hop BFS cannot express.  The (min, +) case of
+    _frontier_query."""
+    return _frontier_query(spark, sf_dir, SHORTEST)
 
 
 _NJ_TOPK = 3
@@ -1654,186 +1441,6 @@ def q_node_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             "jac_micro",
             F.col("rk").cast("long").alias("rk"),
         )
-    )
-
-
-# ---------------------------------------------------------------- shortest path
-
-_SP_ROUNDS = 10  # fixed unroll; min-plus can improve through paths LONGER
-#                  than the hop diameter (many cheap edges beat one dear
-#                  one) — certified at fixpoint in-query, q_widest_path
-#                  discipline; fixtures settle in <= 5 (measured sf0.001/
-#                  0.01/0.1)
-_SP_COST = "1000000 // w + 1"  # inverse-strength latency: strong links cheap
-
-
-def shortest_path(edges_w: DataFrame, seeds: DataFrame, rounds: int = _SP_ROUNDS,
-                  truncate: bool = True, report_fixpoint: bool = False) -> DataFrame:
-    """Min-plus (Bellman-Ford) shortest-path distance from a seed set
-    over a weighted undirected edge list ``(src, dst, cost)``: dist(v)
-    = min over paths of the edge-cost sum.  The additive twin of
-    widest_path — same improved-only frontier (distances only ever
-    DECREASE, so relaxing from improved nodes alone reaches the same
-    monotone fixpoint as whole-vector Bellman-Ford), all-integer so
-    the engines agree exactly.  Per-round shuffle is O(|frontier|·deg);
-    lineage truncation per round (swap localCheckpoint for checkpoint
-    cadence on a real cluster).
-
-    ``report_fixpoint=True`` returns ``(dist, observed)`` — same
-    contract and proof as widest_path: an observed empty frontier means
-    every settled value was already expanded after its last improvement,
-    so the caller's full-relaxation certificate is redundant.
-
-    r13 state discipline: identical to bfs_hops/widest_path — sym
-    persisted hash(dst) once (the expansion aggregate rides it),
-    improved-detect + state-update collapsed into one full-outer merge
-    (min-monotone twin of widest_path), per-round state eagerly
-    checkpointed (flat plans; see bfs_hops)."""
-    import os
-
-    n_part = int(os.environ.get("MMBD_CC_SHUFFLE_PARTITIONS", "8"))
-    ck = (lambda df: df.localCheckpoint(eager=True)) if truncate else (lambda df: df)
-    sym = edges_w.select("src", "dst", "cost").unionAll(
-        edges_w.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "cost")
-    ).repartition(n_part, "dst")
-    if truncate:
-        sym = sym.persist()
-    dist = ck(seeds.select("node", F.lit(0).cast("long").alias("dist")))
-    frontier = dist
-    observed_fixpoint = False
-    imp = F.col("cand").isNotNull() & (F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
-    try:
-        for r in range(rounds):
-            reached = (
-                sym.join(F.broadcast(frontier.withColumnRenamed("node", "src")), "src")
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("dist") + F.col("cost")).alias("cand"),
-                )
-                .groupBy("node")
-                .agg(F.min("cand").alias("cand"))
-            )
-            merged = ck(
-                dist.join(reached, "node", "full_outer").select(
-                    "node",
-                    F.when(imp, F.col("cand")).otherwise(F.col("dist")).alias("dist"),
-                    imp.alias("mmbd_new"),
-                )
-            )
-            improved = merged.where(F.col("mmbd_new")).select("node", "dist")
-            dist = merged.select("node", "dist")
-            if truncate and improved.isEmpty():
-                # empty frontier = monotone fixpoint; rest are no-ops.
-                # Probed every round since r12 (buys the certificate skip
-                # too).
-                observed_fixpoint = True
-                break
-            frontier = improved
-    finally:
-        if truncate:
-            sym.unpersist()  # dist is a projection of an eager checkpoint
-    return (dist, observed_fixpoint) if report_fixpoint else dist
-
-
-def _sql_shortest_path(rounds: int = _SP_ROUNDS) -> str:
-    """The identical min-plus relaxation unrolled into DuckDB CTEs."""
-    ctes = [
-        f"""e AS MATERIALIZED (
-  SELECT l.l_suppkey * 2 AS src, o.o_custkey * 2 + 1 AS dst,
-         count(DISTINCT l.l_orderkey) AS w
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-  GROUP BY src, dst
-),
-ed AS MATERIALIZED (
-  SELECT src, dst, {_SP_COST} AS cost FROM e
-  UNION ALL SELECT dst AS src, src AS dst, {_SP_COST} AS cost FROM e
-),
-c0 AS (SELECT DISTINCT src AS node, CAST(0 AS BIGINT) AS dist
-       FROM ed WHERE src % 20 = 0)"""
-    ]
-    for i in range(1, rounds + 1):
-        ctes.append(
-            f"""c{i} AS MATERIALIZED (
-  SELECT node, min(dist) AS dist FROM (
-    SELECT node, dist FROM c{i - 1}
-    UNION ALL
-    SELECT ed.dst AS node, c.dist + ed.cost AS dist
-    FROM ed JOIN c{i - 1} c ON ed.src = c.node
-  ) GROUP BY node
-)"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""
-SELECT CASE WHEN node % 2 = 0 THEN 'supplier' ELSE 'customer' END AS kind,
-       CAST(node // 2 AS BIGINT) AS key,
-       CAST(dist AS BIGINT) AS dist
-FROM c{rounds}
-"""
-    )
-
-
-def _certify_shortest_fixpoint(ew: DataFrame, dist: DataFrame) -> None:
-    """Min-plus twin of _certify_bfs_fixpoint (one full relaxation of
-    the settled distances; raise on any improvement)."""
-    sym = ew.unionAll(
-        ew.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "cost")
-    )
-    relaxed = (
-        sym.join(dist.withColumnRenamed("node", "src"), "src")
-        .select(F.col("dst").alias("node"), (F.col("dist") + F.col("cost")).alias("cand"))
-        .groupBy("node")
-        .agg(F.min("cand").alias("cand"))
-    )
-    improved = (
-        relaxed.join(dist, "node", "left_outer")
-        .where(F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
-        .count()
-    )
-    if improved:
-        raise AssertionError(
-            f"q_shortest_path: {improved} vertices still improvable after "
-            f"{_SP_ROUNDS} rounds — raise _SP_ROUNDS for this fixture"
-        )
-
-
-@register(
-    "q_shortest_path",
-    oracle=_sql_shortest_path(),
-    post_check=_unroll_stability_check(_sql_shortest_path, _SP_ROUNDS, "_SP_ROUNDS"),
-)
-def q_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted shortest-path (Bellman-Ford min-plus) distance from the
-    seed suppliers (suppkey % 10 == 0) over the trade graph with
-    inverse-strength costs (cost = 1e6//w + 1: the more shared orders,
-    the cheaper the hop) — the trust/latency propagation primitive
-    beside q_bfs_hops' unit hops and q_widest_path's bottleneck
-    capacity; min-plus takes LONGER-than-diameter paths when many
-    strong links beat one weak one, which hop BFS cannot express.
-    ORACLE-CHECKED via identically-unrolled min-plus relaxation CTEs
-    (all-integer, monotone decreasing); fixpoint CERTIFIED in-query
-    with one extra relaxation (the q_widest_path discipline), so a
-    fixture needing deeper search fails loudly instead of hashing
-    green wrong-together."""
-    ew = trade_edges_weighted(spark, sf_dir).selectExpr("src", "dst", f"{_SP_COST.replace('//', ' DIV ')} AS cost")
-    seeds = (
-        ew.select(F.col("src").alias("node"))
-        .unionAll(ew.select(F.col("dst").alias("node")))
-        .where(F.col("node") % 20 == 0)
-        .distinct()
-    )
-    dist, at_fixpoint = shortest_path(ew, seeds, report_fixpoint=True)
-    # certificate only on the uncertified path — an observed empty
-    # frontier is already a fixpoint proof (see q_bfs_hops' comment)
-    if not at_fixpoint:
-        _certify_shortest_fixpoint(ew, dist)
-    return dist.select(
-        F.when(F.col("node") % 2 == 0, F.lit("supplier"))
-        .otherwise(F.lit("customer"))
-        .alias("kind"),
-        (F.col("node") / 2).cast("long").alias("key"),
-        F.col("dist").cast("long").alias("dist"),
     )
 
 
@@ -1957,10 +1564,9 @@ def modularity(edges: DataFrame, lp: DataFrame) -> DataFrame:
     )
 
 
-_ASSORT_SQL = """
+_ASSORT_SQL = f"""
 WITH e AS MATERIALIZED (
-  SELECT DISTINCT l.l_suppkey * 2 AS src, o.o_custkey * 2 + 1 AS dst
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+  {_TRADE_EDGES_SQL}
 ),
 ed AS MATERIALIZED (SELECT src, dst FROM e UNION SELECT dst AS src, src AS dst FROM e),
 deg AS MATERIALIZED (SELECT src AS node, count(*) AS d FROM ed GROUP BY src),

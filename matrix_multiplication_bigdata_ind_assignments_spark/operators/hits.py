@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from .graph import _PR_ITERS
+from .graph import _PR_ITERS, _TRADE_EDGES_SQL, _decode_node, _decode_sql, trade_edges
 
 _HITS_ITERS = _PR_ITERS  # 10 — same fixed-unroll contract as PageRank
 
@@ -186,9 +186,8 @@ def _sql_hits(iters: int = _HITS_ITERS) -> str:
     side (round the contribution sum, round the squared-norm sum, sqrt,
     round, divide, round) so both engines stay bit-identical."""
     ctes = [
-        """ed AS MATERIALIZED (
-  SELECT DISTINCT l.l_suppkey * 2 AS src, o.o_custkey * 2 + 1 AS dst
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+        f"""ed AS MATERIALIZED (
+  {_TRADE_EDGES_SQL}
 ),
 nodes AS MATERIALIZED (SELECT src AS node FROM ed UNION SELECT dst AS node FROM ed),
 h0 AS MATERIALIZED (SELECT node, 1.0 AS hub FROM nodes)"""
@@ -216,8 +215,7 @@ h{i} AS MATERIALIZED (
         "WITH "
         + ",\n".join(ctes)
         + f"""
-SELECT CASE WHEN nodes.node % 2 = 0 THEN 'supplier' ELSE 'customer' END AS kind,
-       CAST(nodes.node // 2 AS BIGINT) AS key,
+SELECT {_decode_sql("nodes.node")},
        round(coalesce(h.hub, 0.0), 6) AS hub,
        round(coalesce(a.auth, 0.0), 6) AS auth
 FROM nodes LEFT JOIN h{iters} h ON nodes.node = h.node
@@ -232,12 +230,9 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph, 10 L2-normalized rounds — the two-vector mutual-recursion
     centrality (principal singular pair of the trade incidence matrix),
     oracle-checked against the same method unrolled into DuckDB CTEs."""
-    from .graph import trade_edges
-
     state = hits(spark, trade_edges(spark, sf_dir))
     return state.select(
-        F.when(F.col("node") % 2 == 0, F.lit("supplier")).otherwise(F.lit("customer")).alias("kind"),
-        (F.col("node") / 2).cast("bigint").alias("key"),
+        *_decode_node(),
         F.round(F.col("hub"), 6).alias("hub"),
         F.round(F.col("auth"), 6).alias("auth"),
     )

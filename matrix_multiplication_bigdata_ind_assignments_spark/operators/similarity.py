@@ -1071,28 +1071,30 @@ def _pq_train_codebook(
 
     r12: ``sample_rows`` reuses an already-collected (h, vec_id)-ordered
     sample from the SAME unit frame (its first _PQ_TRAIN rows are what
-    this function's own collect would return — see _ivf_train_centroids);
+    this function's own collect would return — see _ivf_train_centroids;
+    used only with ``n_rows``, which its validity check needs);
     ``n_rows`` skips the sample builder's count job when known."""
     import numpy as np
 
-    if sample_rows is not None and len(sample_rows) >= min(
-        _PQ_TRAIN, n_rows if n_rows is not None else len(sample_rows)
+    # The reused prefix equals the standalone path's own sample iff every
+    # reused row would survive the standalone hash-threshold filter sized
+    # from n_rows (ADVICE r12): the rows are (h, vec_id)-sorted, so
+    # checking the LAST one suffices.  Without n_rows the cutoff is
+    # unknown and the prefix cannot be checked, so the standalone sample
+    # is used — _PQ_BOOKS content never depends on which query trained
+    # first.
+    rows = None
+    if (
+        sample_rows is not None
+        and n_rows is not None
+        and len(sample_rows) >= min(_PQ_TRAIN, n_rows)
     ):
         rows = sample_rows[:_PQ_TRAIN]
-        # ADVICE r12: VERIFY the prefix-validity condition instead of
-        # documenting it.  The reused prefix equals the standalone path's
-        # own sample iff every reused row would survive the standalone
-        # hash-threshold filter (sized for _PQ_TRAIN from n_rows): the
-        # rows are (h, vec_id)-sorted, so checking the LAST one suffices.
-        # If the probabilistic filter would underflow (never at gate
-        # scales — the filter keeps ~4×_PQ_TRAIN rows in expectation),
-        # fall back to the standalone sample so _PQ_BOOKS content never
-        # depends on which query trained first.
-        if n_rows is not None and n_rows > 4 * _PQ_TRAIN and len(rows) == _PQ_TRAIN:
+        if n_rows > 4 * _PQ_TRAIN and len(rows) == _PQ_TRAIN:
             frac = min(255, max(1, (4 * _PQ_TRAIN * 256) // n_rows))
             if rows[-1]["h"] >= f"{frac:02x}":
-                rows = _pq_train_sample(unit, n_rows=n_rows)
-    else:
+                rows = None
+    if rows is None:
         rows = _pq_train_sample(unit, n_rows=n_rows)
     X = np.array([r["u"] for r in rows])  # (n, 64)
     sub_dim = X.shape[1] // _PQ_M

@@ -272,7 +272,7 @@ def test_bfs_hops_known_graph(spark):
         [(1, 2), (2, 3), (3, 4), (4, 5)], "src long, dst long"
     )
     seeds = spark.createDataFrame([(1,)], "node long")
-    got = {r["node"]: r["dist"] for r in G.bfs_hops(edges, seeds).collect()}
+    got = {r["node"]: r["dist"] for r in G.frontier_relax(edges, seeds, G.BFS).collect()}
     assert got == {1: 0, 2: 1, 3: 2, 4: 3, 5: 4}
 
 
@@ -283,7 +283,7 @@ def test_bfs_hops_multi_source_takes_min(spark):
         [(1, 2), (2, 3), (3, 4), (4, 5)], "src long, dst long"
     )
     seeds = spark.createDataFrame([(1,), (5,)], "node long")
-    got = {r["node"]: r["dist"] for r in G.bfs_hops(edges, seeds).collect()}
+    got = {r["node"]: r["dist"] for r in G.frontier_relax(edges, seeds, G.BFS).collect()}
     assert got == {1: 0, 2: 1, 3: 2, 4: 1, 5: 0}
 
 
@@ -291,7 +291,7 @@ def test_bfs_hops_unreachable_omitted(spark):
     """Disconnected component never appears in the result."""
     edges = spark.createDataFrame([(1, 2), (10, 11)], "src long, dst long")
     seeds = spark.createDataFrame([(1,)], "node long")
-    got = {r["node"]: r["dist"] for r in G.bfs_hops(edges, seeds).collect()}
+    got = {r["node"]: r["dist"] for r in G.frontier_relax(edges, seeds, G.BFS).collect()}
     assert got == {1: 0, 2: 1}
 
 
@@ -318,7 +318,7 @@ def test_widest_path_hand_graph(spark):
         [(1, 4, 2), (1, 2, 9), (2, 3, 5), (3, 4, 7)], "src long, dst long, w long"
     )
     seeds = spark.createDataFrame([(1,)], "node long")
-    got = {r["node"]: r["cap"] for r in G.widest_path(edges, seeds).collect()}
+    got = {r["node"]: r["cap"] for r in G.frontier_relax(edges, seeds, G.WIDEST).collect()}
     assert got[1] == G._WP_SEED_CAP
     assert got[2] == 9
     assert got[3] == 5
@@ -389,7 +389,7 @@ def test_shortest_path_hand_graph(spark):
         "src long, dst long, cost long",
     )
     seeds = spark.createDataFrame([(1,)], "node long")
-    got = {r["node"]: r["dist"] for r in G.shortest_path(edges, seeds).collect()}
+    got = {r["node"]: r["dist"] for r in G.frontier_relax(edges, seeds, G.SHORTEST).collect()}
     assert got == {1: 0, 2: 1, 3: 2, 4: 3}
 
 
@@ -435,9 +435,13 @@ def test_unroll_stability_check_detects_short_unroll(spark, sf_dir):
 
     from matrix_multiplication_bigdata_ind_assignments_spark.operators.graph import (
         _BFS_ROUNDS,
-        _sql_bfs_hops,
+        BFS,
+        _sql_frontier,
         _unroll_stability_check,
     )
+
+    def _sql_bfs_hops(rounds):
+        return _sql_frontier(BFS, rounds)
     from matrix_multiplication_bigdata_ind_assignments_spark.sources.io import TABLES
 
     con = duckdb.connect()
@@ -523,15 +527,15 @@ def test_frontier_certificate_fires_when_rounds_short(spark):
     seeds = spark.createDataFrame([(1,)], "node long")
     # rounds=2 on a 4-hop path: frontier is non-empty at every probed
     # round, so no fixpoint is observed and the certificate must raise
-    short, observed = G.bfs_hops(edges, seeds, rounds=2, report_fixpoint=True)
+    short, observed = G.frontier_relax(edges, seeds, G.BFS, rounds=2, report_fixpoint=True)
     assert not observed
     with pytest.raises(AssertionError, match="improvable"):
-        G._certify_bfs_fixpoint(edges, short)
+        G._certify_fixpoint(edges, short, G.BFS)
     # the full unroll observes the empty frontier AND the (now skipped)
     # certificate would also pass — the two proofs agree
-    full, observed_full = G.bfs_hops(edges, seeds, rounds=6, report_fixpoint=True)
+    full, observed_full = G.frontier_relax(edges, seeds, G.BFS, rounds=6, report_fixpoint=True)
     assert observed_full
-    G._certify_bfs_fixpoint(edges, full)  # must not raise
+    G._certify_fixpoint(edges, full, G.BFS)  # must not raise
     assert {(r["node"], r["dist"]) for r in full.collect()} == {
         (1, 0), (2, 1), (3, 2), (4, 3), (5, 4)
     }
@@ -545,22 +549,58 @@ def test_frontier_certificate_weighted_twins(spark):
         [(1, 2, 9), (2, 3, 5), (3, 4, 7), (1, 4, 2)], "src long, dst long, w long"
     )
     seeds = spark.createDataFrame([(1,)], "node long")
-    short, observed = G.widest_path(ew, seeds, rounds=1, report_fixpoint=True)
+    short, observed = G.frontier_relax(ew, seeds, G.WIDEST, rounds=1, report_fixpoint=True)
     assert not observed
     with pytest.raises(AssertionError, match="improvable"):
-        G._certify_widest_fixpoint(ew, short)
-    full, observed_full = G.widest_path(ew, seeds, rounds=8, report_fixpoint=True)
+        G._certify_fixpoint(ew, short, G.WIDEST)
+    full, observed_full = G.frontier_relax(ew, seeds, G.WIDEST, rounds=8, report_fixpoint=True)
     assert observed_full
-    G._certify_widest_fixpoint(ew, full)
+    G._certify_fixpoint(ew, full, G.WIDEST)
 
     ewc = ew.selectExpr("src", "dst", "w AS cost")
-    shortd, observed = G.shortest_path(ewc, seeds, rounds=1, report_fixpoint=True)
+    shortd, observed = G.frontier_relax(ewc, seeds, G.SHORTEST, rounds=1, report_fixpoint=True)
     assert not observed
     with pytest.raises(AssertionError, match="improvable"):
-        G._certify_shortest_fixpoint(ewc, shortd)
-    fulld, observed_full = G.shortest_path(ewc, seeds, rounds=10, report_fixpoint=True)
+        G._certify_fixpoint(ewc, shortd, G.SHORTEST)
+    fulld, observed_full = G.frontier_relax(ewc, seeds, G.SHORTEST, rounds=10, report_fixpoint=True)
     assert observed_full
-    G._certify_shortest_fixpoint(ewc, fulld)
+    G._certify_fixpoint(ewc, fulld, G.SHORTEST)
+
+
+_LOOP_RUNS = {
+    "bfs": lambda spark, e, ew: G.frontier_relax(e, _seed_nodes(e), G.BFS),
+    "widest": lambda spark, e, ew: G.frontier_relax(ew, _seed_nodes(e), G.WIDEST),
+    "shortest": lambda spark, e, ew: G.frontier_relax(
+        ew.selectExpr("src", "dst", "1000000 DIV w + 1 AS cost"), _seed_nodes(e), G.SHORTEST
+    ),
+    "pagerank_uniform": lambda spark, e, ew: G.pagerank(spark, e),
+    "pagerank_seeded": lambda spark, e, ew: G.pagerank(spark, e, seed_mod=20),
+    "pagerank_directed": lambda spark, e, ew: G.pagerank(spark, e, directed=True),
+    "pagerank_copartition": lambda spark, e, ew: G.pagerank(
+        spark, e, join_strategy="copartition"
+    ),
+}
+
+
+def _seed_nodes(edges):
+    return edges.select(F.col("src").alias("node")).where("node % 20 = 0").distinct()
+
+
+@pytest.mark.parametrize("loop", sorted(_LOOP_RUNS))
+def test_graph_loops_partition_count_invariant(spark, sf_dir, monkeypatch, loop):
+    """Metamorphic: the loops cluster their edge list on
+    MMBD_CC_SHUFFLE_PARTITIONS partitions, and that count must not reach
+    the result — 1, 7 and the default 8 give identical rows for every
+    frontier semiring and every PageRank mode."""
+    e = _trade_edges(spark, sf_dir)
+    ew = G.trade_edges_weighted(spark, sf_dir).localCheckpoint(eager=True)
+    run = _LOOP_RUNS[loop]
+    monkeypatch.delenv("MMBD_CC_SHUFFLE_PARTITIONS", raising=False)
+    base = sorted(tuple(r) for r in run(spark, e, ew).collect())
+    assert base
+    for n in ("1", "7", "8"):
+        monkeypatch.setenv("MMBD_CC_SHUFFLE_PARTITIONS", n)
+        assert sorted(tuple(r) for r in run(spark, e, ew).collect()) == base, n
 
 
 def test_kcore_early_stop_equals_full_unroll(spark):

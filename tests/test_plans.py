@@ -406,7 +406,7 @@ def test_bfs_frontier_joins_broadcast(spark, sf_dir, qs):
 
     edges = G.trade_edges(spark, sf_dir)
     seeds = edges.select(edges.src.alias("node")).where("node % 20 = 0").distinct()
-    plan = plan_of(G.bfs_hops(edges, seeds, rounds=1, truncate=False))
+    plan = plan_of(G.frontier_relax(edges, seeds, G.BFS, rounds=1, truncate=False))
     assert "BroadcastHashJoin" in plan
 
 

@@ -1,4 +1,4 @@
-"""TrustRank / personalized PageRank (operators/ppr.py)."""
+"""TrustRank: graph.pagerank with a seeded teleport (operators/ppr.py)."""
 
 import sys
 
@@ -8,10 +8,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, "/root/repo")
 
 from matrix_multiplication_bigdata_ind_assignments_spark.operators.graph import _decode_ranks, pagerank, trade_edges  # noqa: E402
-from matrix_multiplication_bigdata_ind_assignments_spark.operators.ppr import (  # noqa: E402
-    _SEED_MOD,
-    personalized_pagerank,
-)
+from matrix_multiplication_bigdata_ind_assignments_spark.operators.ppr import _SEED_MOD  # noqa: E402
 
 from conftest import rows_set  # noqa: E402
 
@@ -22,7 +19,7 @@ def test_uniform_seed_set_reproduces_pagerank(spark, sf_dir):
     make the two implementations bit-identical (same recipe that makes
     the unrolled-CTE oracles comparable)."""
     edges = trade_edges(spark, sf_dir)
-    ppr = rows_set(_decode_ranks(personalized_pagerank(spark, edges, seed_mod=1)))
+    ppr = rows_set(_decode_ranks(pagerank(spark, edges, seed_mod=1)))
     pr = rows_set(_decode_ranks(pagerank(spark, trade_edges(spark, sf_dir))))
     assert ppr == pr
 
@@ -32,7 +29,7 @@ def test_trustrank_mass_and_teleport_floor(spark, sf_dir):
     accumulation).  Every seed holds at least its teleport floor
     (1−d)·1/|S| — exact from the update since the contribution term is
     non-negative."""
-    ranks = personalized_pagerank(spark, trade_edges(spark, sf_dir)).collect()
+    ranks = pagerank(spark, trade_edges(spark, sf_dir), seed_mod=_SEED_MOD).collect()
     total = sum(r["rank"] for r in ranks)
     assert abs(total - 1.0) < 1e-6, total
     seeds = [r for r in ranks if r["node"] % _SEED_MOD == 0]
@@ -46,4 +43,18 @@ def test_trustrank_empty_seed_set_raises(spark):
     zero vector."""
     edges = spark.createDataFrame([(1, 3), (3, 5)], ["src", "dst"])
     with pytest.raises(ValueError, match="empty seed set"):
-        personalized_pagerank(spark, edges)  # odd ids only: none % 20 == 0
+        pagerank(spark, edges, seed_mod=_SEED_MOD)  # odd ids only: none % 20 == 0
+
+
+def test_seeded_directed_dangling_mass_returns_to_seeds(spark):
+    """Directed + seeded: the dangling mass is handed back along the
+    teleport vector (d·m·sw), so Σrank = 1 and a node outside the seed
+    set with no in-edges holds rank 0."""
+    edges = spark.createDataFrame([(2, 3), (3, 5), (4, 5), (7, 2)], "src long, dst long")
+    ranks = {
+        r["node"]: r["rank"]
+        for r in pagerank(spark, edges, directed=True, seed_mod=2).collect()
+    }
+    assert abs(sum(ranks.values()) - 1.0) < 1e-9
+    assert ranks[7] == 0.0
+    assert ranks[2] > ranks[3] > 0.0

@@ -222,3 +222,7 @@ def test_pq_codebook_sample_prefix_guard(monkeypatch):
     # rows — the guard must retrain from the standalone sample.
     S._pq_train_codebook(None, sample_rows=mk("ff"), n_rows=100_000)
     assert calls == [100_000]
+    # No corpus count: the cutoff is unknown, so even a '00'-tailed prefix
+    # cannot be verified — the guard must use the standalone sample.
+    S._pq_train_codebook(None, sample_rows=mk("00"), n_rows=None)
+    assert calls == [100_000, None]

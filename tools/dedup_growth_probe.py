@@ -1,6 +1,6 @@
 """Dedup-family EDGE-GROWTH probe (VERDICT r10 item 7): the two-decade
 disjoint blow-up the graph loops already carry (tools/probe_100x.py,
-bfs/sp_growth_probe), applied to the two dedup shapes the 100 TB claim
+frontier_growth_probe), applied to the two dedup shapes the 100 TB claim
 leans on:
 
 1. **q_dedup_components_star** — MinHash-LSH candidate pairs +

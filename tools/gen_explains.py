@@ -274,7 +274,7 @@ AUDIT = {
     "join back as broadcasts; every reduction is a BIGINT micro-nat sum (map-side combinable); "
     "the probe joins stream vs model on (w1, w2) — broadcast at fixture scale, documented "
     "shuffle-join degradation at real model sizes",
-    "q_closeness_landmarks": "the bfs_hops delta/frontier discipline on (node, landmark) pair "
+    "q_closeness_landmarks": "the frontier_relax delta/frontier discipline on (node, landmark) pair "
     "state: every round's expansion joins the resident symmetric edge list against the BROADCAST "
     "frontier only (never the settled table), first-reach anti-join per pair, per-round eager "
     "checkpoints — the final frame explains as the harmonic agg over an ExistingRDD distance table",
